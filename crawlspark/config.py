@@ -17,8 +17,9 @@ from dataclasses import dataclass, field
 N_BUCKETS = int(os.environ.get("CRAWLSPARK_BUCKETS", "64"))
 BUCKET_FN_VERSION = "xxhash64-pmod-v1"
 
-# mega-host salting factor (B6): bounds any (host, salt) group that flows
-# into applyInPandas so a single Python worker never sees a whole mega-host.
+# mega-host salting factor (B6): the schedule's salted two-phase window
+# top-B ranks a host's candidates in this many (host, salt) slices, so one
+# task never ranks a whole mega-host.
 SALT = int(os.environ.get("CRAWLSPARK_SALT", "8"))
 
 # --- bloom sidecar (C3) -----------------------------------------------------

@@ -7,7 +7,7 @@ DataFrames, one durable snapshot per round:
     frontier ─(⊥ seen by loop invariant; standalone callers get the
                bloom probe → exact anti-join entry check)→ candidates
             ─(robots broadcast join; drop disallowed)→ allowed
-            ─(salted applyInPandas schedule; budget, sched_ts)→ scheduled
+            ─(salted two-phase window top-B; budget, sched_ts)→ scheduled
             ─(total-order sort → fetch_log)→ exact fetch order
             ─(as-of join pages; left-outer for misses)→ fetched
             ─(pandas-UDF extract: text, links)→ parsed
@@ -253,8 +253,8 @@ def run_round(
 
     # The replay-exact fetch order IS the sort key (sched_ts, host, url);
     # materializing a dense global seq costs 3 extra jobs/round, so it is
-    # derived on demand (sched.with_seq / sched.log_with_seq) by validation
-    # paths instead of inside the hot loop.
+    # derived on demand (sched.global_seq / sched.log_with_seq) by
+    # validation paths instead of inside the hot loop.
     fetch_log = scheduled.select(
         F.lit(round_no).cast("int").alias("round"), "sched_ts", "host", "url"
     )
@@ -322,6 +322,11 @@ def run_round(
         # discovered ∖ new_seen = (discovered ∖ delta) ∖ seen — and the
         # stable within() sees the same candidate rows per surviving url,
         # so the kept representative (hence replay order) is identical.
+        # Pinned first: the seen check reads its probe more than once (the
+        # small_probe key build and anti-join, the bloom sure/maybe split)
+        # and AQE cannot reuse that exchange, so unpinned, links_to_frontier
+        # and its canonicalize UDF would run two or three times per round.
+        discovered = _materialize(discovered, cfg.persist_mode)
         fresh = _probe_unseen(
             discovered.join(delta_keys, "url_hash", "left_anti")
         )

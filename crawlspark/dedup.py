@@ -75,9 +75,10 @@ def unseen(
         # hashpartitioning exchange at all), and the crawl loop's probe is
         # already unique per url_hash; duplicate keys from a standalone
         # caller only fatten the broadcast, never change the semi/anti
-        # membership semantics.  NOTE the probe plan is referenced twice
-        # (key build + final anti-join); a caller whose probe is expensive
-        # to recompute should pin it (persist/localCheckpoint) first.
+        # membership semantics.  The probe plan is read twice (key build +
+        # final anti-join) and AQE does not reuse its exchange when column
+        # pruning differs between the reads, so crawl.run_round pins the
+        # discovered links (its expensive probe) before calling here.
         probe_keys = frontier.select(*join_cols)
         hits = seen.select(*join_cols).join(
             F.broadcast(probe_keys), join_cols, "left_semi"

@@ -9,26 +9,20 @@ shared exactly with the pure-Python oracle (tests/oracle_crawler.py) — is:
   candidates this round, the k-th at ``sched_ts = round_start + (k-1)*delay``;
 * the global fetch order within a round is ``(sched_ts, host, url)``.
 
-Two physical paths produce the identical schedule:
-
-* ``schedule_window`` — pure window functions (whole-stage codegen, no
-  Python).  Preferred when no host is pathological.
-* ``schedule`` — BASELINE.json's "salted-key repartition + applyInPandas
-  priority queues": phase 1 runs a vectorized top-B *per (host, salt)* group so a
-  mega-host (30%+ of the frontier) is split across SALT bounded groups and
-  never overwhelms one Python worker; phase 2 re-ranks the ≤ SALT*B
-  survivors per host with a window (small data) and applies the budget
-  across salts (SURVEY.md §7 hard-part 4).
+``schedule`` computes it as a salted two-phase window top-B (SURVEY.md §7
+hard-part 4), entirely in the JVM: phase 1 ranks each host's candidates
+inside ``(host, salt)`` slices, so a mega-host (30%+ of the frontier) is
+spread over ``salt`` shuffle partitions, and keeps the top B of each slice;
+phase 2 re-ranks the ≤ salt×B survivors per host and applies the budget
+across salts.  ``cap_frontier`` runs the same top-k with a literal limit.
 """
 
 from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from . import config, polite, urlnorm
 
@@ -90,20 +84,29 @@ def _assign_ts(df: DataFrame, round_no: int, round_seconds: float) -> DataFrame:
     )
 
 
-def schedule_window(
-    frontier: DataFrame,
-    round_no: int,
-    round_seconds: float = config.ROUND_SECONDS,
-    max_budget: int = config.MAX_BUDGET_PER_HOST,
+def _salted_topk(
+    df: DataFrame, limit, salt: int, rank_col: str = "__r"
 ) -> DataFrame:
-    """F1+F2: rank per host, cut to budget, assign sched_ts.  Pure windows."""
-    w = Window.partitionBy("host").orderBy(*_HOST_ORDER)
-    df = _with_budget(frontier, round_seconds, max_budget, round_no=round_no)
+    """Per host, the ``limit`` smallest rows under the host order, ranked
+    1..n in ``rank_col``; ``limit`` is an int or a per-row column name.
+
+    Phase 1 ranks inside ``(host, pmod(url_hash, salt))`` slices — the
+    window's hash shuffle on that key IS the salted-key repartition, so a
+    mega-host is spread over ``salt`` partitions — and keeps each slice's
+    top ``limit``; phase 2 re-ranks the ≤ salt×limit survivors per host
+    exactly.  ``url`` is unique per row, so the order is total and the
+    result does not depend on ``salt`` or the input's partitioning.
+    """
+    lim = F.col(limit) if isinstance(limit, str) else F.lit(limit)
+    w1 = Window.partitionBy("host", "__salt").orderBy(*_HOST_ORDER)
+    w2 = Window.partitionBy("host").orderBy(*_HOST_ORDER)
     return (
-        df.withColumn("host_rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("host_rank") <= F.col("budget"))
-        .transform(lambda d: _assign_ts(d, round_no, round_seconds))
-        .drop("budget")
+        df.withColumn("__salt", F.pmod(F.col("url_hash"), F.lit(salt)).cast("int"))
+        .withColumn(rank_col, F.row_number().over(w1))
+        .filter(F.col(rank_col) <= lim)
+        .drop("__salt")
+        .withColumn(rank_col, F.row_number().over(w2))
+        .filter(F.col(rank_col) <= lim)
     )
 
 
@@ -115,42 +118,18 @@ def schedule(
     salt: int = config.SALT,
     reputation: DataFrame | None = None,
 ) -> DataFrame:
-    """J4: salted applyInPandas priority queues, then per-host re-rank.
+    """J4+F1+F2: rank per host, cut to budget, assign ``sched_ts``.
 
-    Identical output to ``schedule_window`` (asserted in tests); survives a
-    mega-host because no Python worker ever materializes more than one
-    (host, salt) slice, and each slice emits at most ``budget`` rows.
-    ``reputation`` (host, rep) scales each known host's budget — see
-    :func:`_with_budget` / :func:`host_reputation`.
+    A salted two-phase window top-B (:func:`_salted_topk`) with the
+    per-host budget as the limit; ``reputation`` (host, rep) scales each
+    known host's budget — see :func:`_with_budget` /
+    :func:`host_reputation`.
     """
     df = _with_budget(
         frontier, round_seconds, max_budget, reputation, round_no=round_no
-    ).withColumn(
-        "salt", F.pmod(F.col("url_hash"), F.lit(salt)).cast("int")
     )
-
-    out_schema = StructType(
-        [f for f in df.schema.fields if f.name != "salt"]
-    )
-
-    def _topb(pdf: pd.DataFrame) -> pd.DataFrame:
-        # priority queue per (host, salt): keep the B smallest under the
-        # host order key.  Fully vectorized (pandas sort is the queue —
-        # no per-row Python); `url` is unique per frontier row, so the key
-        # is a total order and head(B) is exact.
-        b = int(pdf["budget"].iloc[0])
-        return pdf.sort_values(_HOST_ORDER, kind="mergesort").head(b).drop(columns=["salt"])
-
-    # phase 1: provisional top-B per salt slice (bounded group size).
-    # groupBy(host, salt) IS the salted-key repartition — one hash shuffle
-    # on the salted key, no extra repartition pass.
-    provisional = df.groupBy("host", "salt").applyInPandas(_topb, out_schema)
-    # phase 2: exact budget across salts — candidate set is ≤ SALT*B per
-    # host, so this window is cheap.
-    w = Window.partitionBy("host").orderBy(*_HOST_ORDER)
     return (
-        provisional.withColumn("host_rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("host_rank") <= F.col("budget"))
+        _salted_topk(df, "budget", salt, rank_col="host_rank")
         .transform(lambda d: _assign_ts(d, round_no, round_seconds))
         .drop("budget")
     )
@@ -166,68 +145,6 @@ def order(scheduled: DataFrame) -> DataFrame:
     return scheduled.orderBy("sched_ts", "host", "url")
 
 
-def with_seq(scheduled: DataFrame, round_no: int) -> DataFrame:
-    """Attach the dense global fetch sequence WITHOUT a single-partition
-    window (which would serialize the whole round at 10^10 scale).
-
-    Two-phase zip-with-index over range partitions: range-partition + sort
-    by the total order, count rows per (ordered) partition, then add
-    ``offset[pid] + local position`` per row in one Arrow pass.  The seq
-    values depend only on the total order, not on partition boundaries.
-    """
-    import pyarrow as pa
-    from pyspark import TaskContext
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    cols = ["sched_ts", "host", "url"]
-    sc = scheduled.sparkSession.sparkContext
-    n_parts = max(sc.defaultParallelism, 1)
-    ranged = (
-        scheduled.repartitionByRange(n_parts, *cols)
-        .sortWithinPartitions(*cols)
-        .localCheckpoint(eager=True)  # pin partitioning for both passes
-    )
-    counts = (
-        ranged.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    offsets: dict[int, int] = {}
-    acc = 0
-    for r in sorted(counts, key=lambda r: r["pid"]):
-        offsets[int(r["pid"])] = acc
-        acc += int(r["count"])
-
-    schema = StructType(
-        [
-            StructField("round", IntegerType(), False),
-            # int64: a round at 10^10-URL scale overflows int32 (ADVICE r1)
-            StructField("seq", LongType(), False),
-        ]
-        + list(scheduled.schema.fields)
-    )
-
-    def _add_seq(batches):
-        ctx = TaskContext.get()
-        pos = offsets.get(ctx.partitionId() if ctx else 0, 0)
-        for batch in batches:
-            n = batch.num_rows
-            rnd = pa.array([round_no] * n, type=pa.int32())
-            seq = pa.array(range(pos + 1, pos + n + 1), type=pa.int64())
-            pos += n
-            yield pa.RecordBatch.from_arrays(
-                [rnd, seq] + list(batch.columns),
-                names=["round", "seq"] + list(batch.schema.names),
-            )
-
-    # Materialize HERE: TaskContext.partitionId() is only meaningful while
-    # the mapInArrow stage runs directly over `ranged`'s partitions.  If the
-    # lazy plan were embedded under e.g. a union, partition ids would be
-    # renumbered and the offsets would misalign.
-    return ranged.mapInArrow(_add_seq, schema).localCheckpoint(eager=True)
-
-
 def global_seq(
     df: DataFrame,
     order_cols: list,
@@ -237,8 +154,7 @@ def global_seq(
 ) -> tuple[DataFrame, int]:
     """Dense 1-based global sequence by a total order WITHOUT an
     ``Exchange SinglePartition`` (which would funnel the whole relation
-    through one task at 10^10 scale) — the generic form of the two-phase
-    zip-with-index :func:`with_seq` uses for the fetch order.
+    through one task at 10^10 scale): a two-phase zip-with-index.
 
     Range-partition + sort by the order, count rows per (ordered)
     partition (n_parts rows to the driver, never data), then emit
@@ -306,10 +222,10 @@ def global_seq(
 
     # mapInArrow must run directly over `ranged`'s pinned partitions so
     # TaskContext.partitionId() lines up with the counted offsets — AND the
-    # result itself must be pinned (same hazard with_seq documents): if the
-    # lazy mapInArrow plan were embedded under e.g. a union or coalesce,
-    # partition ids would be renumbered at execution time and _add_seq
-    # would read misaligned offsets, silently corrupting seq (r4 review).
+    # result itself must be pinned: if the lazy mapInArrow plan were
+    # embedded under e.g. a union or coalesce, partition ids would be
+    # renumbered at execution time and _add_seq would read misaligned
+    # offsets, silently corrupting seq (r4 review).
     return _pin(ranged.mapInArrow(_add_seq, schema)), acc
 
 
@@ -380,28 +296,11 @@ def cap_frontier(
     depth, url) — at 10^10-frontier scale a handful of mega-hosts would
     otherwise swamp storage and every downstream shuffle.
 
-    Salted two-phase top-k, same shape as :func:`schedule`: phase 1 ranks
-    inside bounded (host, salt) slices so no task ever materializes a
-    mega-host's full backlog; phase 2 re-ranks the ≤ salt×per_host
-    survivors per host exactly.  Deterministic; schema preserved.
+    Same salted two-phase top-k as :func:`schedule`
+    (:func:`_salted_topk`), with ``per_host`` as the limit.  Deterministic;
+    schema preserved.
     """
-    cols = frontier.columns
-    sliced = frontier.withColumn(
-        "__salt", F.pmod(F.col("url_hash"), F.lit(salt)).cast("int")
-    )
-    w1 = Window.partitionBy("host", "__salt").orderBy(*_HOST_ORDER)
-    provisional = (
-        sliced.withColumn("__r", F.row_number().over(w1))
-        .filter(F.col("__r") <= per_host)
-        .drop("__r", "__salt")
-    )
-    w2 = Window.partitionBy("host").orderBy(*_HOST_ORDER)
-    return (
-        provisional.withColumn("__r", F.row_number().over(w2))
-        .filter(F.col("__r") <= per_host)
-        .drop("__r")
-        .select(*cols)
-    )
+    return _salted_topk(frontier, per_host, salt).select(*frontier.columns)
 
 
 def host_reputation(

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import heapq
 import math
 
 import pytest
@@ -31,15 +32,52 @@ def frontier(spark):
     return out.cache()
 
 
-def test_schedule_paths_identical(spark, frontier):
-    """The applyInPandas (salted heapq) path must emit exactly the same
-    schedule as the pure-window path — same rows, ranks, timestamps."""
-    a = sched.schedule_window(frontier, round_no=0, round_seconds=60.0)
-    b = sched.schedule(frontier, round_no=0, round_seconds=60.0, salt=4)
+def _sched_rows(df):
     cols = ["url", "host", "host_rank", "sched_ts"]
-    ra = sorted(tuple(r) for r in a.select(*cols).collect())
-    rb = sorted(tuple(r) for r in b.select(*cols).collect())
-    assert ra == rb
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_schedule_salt_invariant(spark, frontier):
+    """Salting is a physical choice only: salt 1, 4 and 8 emit the same
+    rows, ranks and timestamps."""
+    want = _sched_rows(sched.schedule(frontier, round_no=0, round_seconds=60.0, salt=1))
+    for salt in (4, 8):
+        got = sched.schedule(frontier, round_no=0, round_seconds=60.0, salt=salt)
+        assert _sched_rows(got) == want
+
+
+def test_schedule_matches_heapq_reference(spark, frontier):
+    """Per host, the scheduled rows are heapq.nsmallest(budget, ...) under
+    the host order — the rule tests/oracle_crawler.py replays — with the
+    k-th at sched_ts = (k-1)*delay.  host0's budget (120) binds."""
+    rows = frontier.select(
+        "url", "host", "priority", "discovered_round", "depth", "crawl_delay"
+    ).collect()
+    by_host: dict[str, list] = {}
+    for r in rows:
+        by_host.setdefault(r["host"], []).append(r)
+    want = []
+    for host, items in by_host.items():
+        delay = items[0]["crawl_delay"]
+        budget = min(config.MAX_BUDGET_PER_HOST, max(1, math.floor(60.0 / delay)))
+        best = heapq.nsmallest(
+            budget,
+            [(r["priority"], r["discovered_round"], r["depth"], r["url"]) for r in items],
+        )
+        want += [(u, host, k, (k - 1) * delay) for k, (*_, u) in enumerate(best, start=1)]
+    assert len(by_host["host0.example"]) > 120  # the budget binds on host0
+    got = _sched_rows(sched.schedule(frontier, round_no=0, round_seconds=60.0, salt=8))
+    assert got == sorted(want)
+
+
+def test_schedule_plan_has_no_python(spark, frontier):
+    """The schedule runs in the JVM: no pandas/Arrow/Python UDF operator."""
+    plan = (
+        sched.schedule(frontier, round_no=0, round_seconds=60.0)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan
 
 
 def test_budget_respected(frontier):
@@ -60,11 +98,13 @@ def test_gaps_respect_crawl_delay(spark, frontier):
 
 def test_order_deterministic_and_total(spark, frontier):
     out = sched.schedule(frontier, round_no=2, round_seconds=60.0)
-    seq1 = [tuple(r) for r in sched.with_seq(out, 2).select("round", "seq", "url").collect()]
-    seq2 = [tuple(r) for r in sched.with_seq(out, 2).select("round", "seq", "url").collect()]
+    order = ["sched_ts", "host", "url"]
+    seq1 = [tuple(r) for r in sched.global_seq(out, order)[0].select("seq", "url").collect()]
+    seq2 = [tuple(r) for r in sched.global_seq(out, order)[0].select("seq", "url").collect()]
     assert seq1 == seq2
-    assert sorted(seq1, key=lambda t: t[1]) == seq1
-    assert len({u for _, _, u in seq1}) == len(seq1)
+    assert sorted(seq1) == seq1
+    assert [s for s, _ in seq1] == list(range(1, len(seq1) + 1))
+    assert len({u for _, u in seq1}) == len(seq1)
     # round-2 timestamps start at 120s
     assert all(r["sched_ts"] >= 120.0 for r in out.select("sched_ts").collect())
 
@@ -148,7 +188,7 @@ def test_indegree_priorities_reorder_schedule(spark):
     )
     prioritized = sched.with_priorities(frontier, prios)
     assert prioritized.columns == frontier.columns
-    out = sched.schedule_window(prioritized, 0, round_seconds=2.0, max_budget=2)
+    out = sched.schedule(prioritized, 0, round_seconds=2.0, max_budget=2)
     got = sorted((r["host_rank"], r["url"]) for r in out.collect())
     # zzz (indegree 3) first, then aaa (indegree 1); mmm (neutral 0.0) cut
     assert got == [(1, "https://h.example/zzz"), (2, "https://h.example/aaa")]
@@ -445,7 +485,7 @@ def test_zero_crawl_delay_does_not_kill_the_round(spark):
     ANSI DIVIDE_BY_ZERO inside budget_col and abort the whole round; now it
     means 'no delay declared' -> max_budget cap."""
     f = _mini_frontier(spark, "zero.example", 5, 0.0)
-    out = sched.schedule_window(f, round_no=0, round_seconds=60.0, max_budget=3)
+    out = sched.schedule(f, round_no=0, round_seconds=60.0, max_budget=3)
     assert out.count() == 3  # capped by max_budget, no crash
 
 
@@ -453,17 +493,14 @@ def test_slow_host_paced_across_rounds(spark):
     """r5 review: delay > round_seconds used to clamp to 1 fetch EVERY
     round (gap = round_seconds << declared delay).  Now the host is
     fetched once every ceil(delay/round_seconds) rounds, so consecutive
-    fetches sit >= delay apart; both schedule twins agree."""
+    fetches sit >= delay apart."""
     f = _mini_frontier(spark, "slow.example", 4, 150.0)  # k = ceil(150/60) = 3
     per_round = []
     logs = []
     for r in range(4):
-        w = sched.schedule_window(f, round_no=r, round_seconds=60.0)
-        s = sched.schedule(f, round_no=r, round_seconds=60.0)
-        rows_w = w.collect()
-        assert len(rows_w) == s.count()  # salted twin agrees
-        per_round.append(len(rows_w))
-        logs.extend((r, x["sched_ts"]) for x in rows_w)
+        rows = sched.schedule(f, round_no=r, round_seconds=60.0).collect()
+        per_round.append(len(rows))
+        logs.extend((r, x["sched_ts"]) for x in rows)
     assert per_round == [1, 0, 0, 1]
     ts = sorted(t for _, t in logs)
     assert ts[1] - ts[0] >= 150.0  # the declared delay is honored

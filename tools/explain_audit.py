@@ -6,7 +6,8 @@ at 100 TB scale:
   side is a BroadcastExchange
 * parquet scans: filters pushed (PushedFilters) and columns pruned (ReadSchema)
 * agg_basic: partial HashAggregate before the shuffle (map-side combine)
-* scheduler: exactly one shuffle on the salted key before applyInPandas
+* scheduler: no Python operator, at most two hash shuffles (the salted
+  ``(host, salt)`` phase-1 window and the per-host re-rank)
 
 Usage: python tools/explain_audit.py
 """
@@ -116,15 +117,27 @@ def main() -> int:
         failures.append("agg: no partial aggregate")
     sections.append(("groupBy agg (map-side combine)", p3, checks3))
 
-    # 4. scheduler: count exchanges
+    # 4. scheduler: JVM-only, one salted-key shuffle + one host re-rank
     p4 = plan_of(sched.schedule(frontier, 0, round_seconds=600.0))
-    n_ex = p4.count("Exchange hashpartitioning")
+    # formatted explain prints an Exchange's partitioning on its
+    # "Arguments:" line, not next to the node name
+    n_ex = p4.count("Arguments: hashpartitioning(")
+    py_ops = [
+        op
+        for op in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython",
+                   "MapInPandas", "MapInArrow")
+        if op in p4
+    ]
     checks4 = [
-        f"exchanges in schedule plan: {n_ex} (1 salted-key shuffle + 1 host re-rank window)"
+        f"{'OK' if n_ex <= 2 else 'FAIL'} exchanges in schedule plan: {n_ex} "
+        "(1 salted (host, salt) window + 1 host re-rank window)",
+        f"{'FAIL' if py_ops else 'OK'} Python operators in schedule plan: {py_ops or 'none'}",
     ]
     if n_ex > 2:
         failures.append(f"schedule: {n_ex} exchanges (expected <= 2)")
-    sections.append(("sched.schedule (salted applyInPandas + re-rank)", p4, checks4))
+    if py_ops:
+        failures.append(f"schedule: Python operators {py_ops}")
+    sections.append(("sched.schedule (salted two-phase window top-B)", p4, checks4))
 
     # 4b. sliver broadcast-flip (r5): the loop's exact seen-recheck must
     # never SMJ — a plain left_anti would shuffle the full seen table every

@@ -8,15 +8,16 @@ design claim with no measured artifact until this run.  The experiment:
   set to 5 (uniform — host0 is just one of 20 ~equal hosts) and 50 (one
   host holding half of a 2M-page corpus, hence ~half of every frontier);
 * the FULL crawl (same config as bench.py's headline: politeness budget
-  wide open, so the scheduler's per-(host, salt) applyInPandas slice sees
-  the whole frontier share of its host) at local[CORES], salt ∈ {8, 1};
+  wide open, so the scheduler's per-(host, salt) window slice sees the
+  whole frontier share of its host) at local[CORES], salt ∈ {8, 1};
 * a schedule-stage micro-bench on synthetic frontiers at TWO row counts
   (SCHED_ROWS_LEVELS, default 4M and 16M) with the same host split,
-  isolating the salted priority-queue stage where the skew actually lands
-  (phase-2's per-host window is JVM-side row_number — cheap even unsalted;
-  the Arrow transfer + pandas sort of one mega slice is the Python-side
-  cost salt bounds).  Two levels show the trend: the unsalted mega slice
-  grows with the frontier, the salted one is bounded at rows*pct/salt;
+  isolating the salted two-phase window top-B where the skew actually
+  lands: unsalted, phase 1 sorts a mega-host's whole share in one task;
+  salted, its biggest slice is rows*pct/salt, and phase 2 re-ranks only
+  the survivors.  With the budget wide open nothing is cut in phase 1, so
+  phase 2 sorts the mega share in one task either way — this is the
+  worst case for salting;
 * replay identity: the fetch_log (round, sched_ts, host, url) digest must be
   IDENTICAL across salt configs on the same corpus — salting is a physical
   plan choice, never a semantic one.
@@ -24,10 +25,29 @@ design claim with no measured artifact until this run.  The experiment:
 Each (corpus, salt) runs in a fresh subprocess because the mega-pct knob
 is read by gen_pages at import time and baked into the JVM's env at first
 launch — two corpora cannot share a JVM.  min-of-REPS per cell (contended
-host).  Writes BENCH/skew_r5.json.
+host).  Writes BENCH/skew_r6.json.
+
+Recorded in BENCH/skew_r6.json (``--sched-only``, 4 cores,
+``CRAWLSPARK_DRIVER_MEM=4g``, min of 2 reps after a warm-up; budget
+200,000 urls per host):
+
+    rows  frontier         salt 8    salt 1
+    4M    50% mega-host    4.07 s    3.57 s
+    16M   50% mega-host   17.11 s   15.82 s
+    4M    uniform          5.44 s    3.90 s
+    16M   uniform         21.72 s   13.64 s
+
+On 4 cores salting does not pay in this stage.  Phase 1 cuts only the
+slices that hold more rows than the budget, so with salt 8 most slices
+pass whole and phase 2 shuffles and sorts them again; what salting buys,
+spreading the mega-host's sort over several tasks, is capped by 4 cores
+that the other hosts' sorts already keep busy.  Salt stays: BASELINE.json
+requires explicit salting, and the scheduler's output does not depend on
+it.
 
 Usage:
     python tools/skew_bench.py            # parent: full matrix -> JSON
+    python tools/skew_bench.py --sched-only   # parent: schedule cells only
     python tools/skew_bench.py --crawl 50 8   # worker (env already set)
     python tools/skew_bench.py --sched 50 8   # worker (env already set)
 """
@@ -59,7 +79,7 @@ SCHED_ROWS_LEVELS = [
         "CRAWLSPARK_SKEW_SCHED_ROWS", "4000000,16000000"
     ).split(",")
 ]
-OUT = os.path.join(_ROOT, "BENCH", "skew_r5.json")
+OUT = os.path.join(_ROOT, "BENCH", "skew_r6.json")
 
 
 def _spark(cores: int):
@@ -69,7 +89,9 @@ def _spark(cores: int):
         f"skew-bench-{cores}",
         master=f"local[{cores}]",
         shuffle_partitions=max(16, cores),
-        extra_conf={"spark.driver.memory": "16g"},
+        extra_conf={
+            "spark.driver.memory": os.environ.get("CRAWLSPARK_DRIVER_MEM", "16g")
+        },
     )
 
 
@@ -153,10 +175,10 @@ def worker_crawl(pct: int, salt: int) -> None:
 
 def worker_sched(pct: int, salt: int, rows: int) -> None:
     """Isolated schedule stage on a synthetic frontier: ``rows`` rows, pct%
-    on one mega-host, priority-queue budget wide open.  Run at more than one
-    ``rows`` level: the unsalted mega slice is one pandas sort (n log n) plus
-    one Arrow transfer, so its wall grows superlinearly with the frontier
-    while the salted variant's biggest slice stays rows*pct/salt."""
+    on one mega-host, budget wide open.  Run at more than one ``rows``
+    level: the unsalted phase-1 mega slice is one task's sort, so its wall
+    grows with the frontier, while the salted variant's biggest phase-1
+    slice stays rows*pct/salt."""
     from pyspark.sql import functions as F
 
     from crawlspark import sched
@@ -219,7 +241,8 @@ def _run_worker(mode: str, pct: int, salt: int, rows: int = 0) -> dict:
 
 
 def main() -> None:
-    if len(sys.argv) > 1:
+    sched_only = sys.argv[1:] == ["--sched-only"]
+    if len(sys.argv) > 1 and not sched_only:
         mode, pct, salt = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
         if mode == "--crawl":
             worker_crawl(pct, salt)
@@ -231,12 +254,12 @@ def main() -> None:
 
     # Reuse cells already measured in a previous run of this tool (same
     # HEAD): crawl cells are minutes each, sched cells seconds.  Delete
-    # BENCH/skew_r5.json to force a full re-measure.
+    # BENCH/skew_r6.json to force a full re-measure.
     cells = {}
     if os.path.exists(OUT):
         with open(OUT) as f:
             cells = dict(json.load(f).get("cells", {}))
-    for pct in (5, 50):
+    for pct in () if sched_only else (5, 50):
         for salt in (8, 1):
             key = f"crawl_pct{pct}_salt{salt}"
             if key not in cells:
@@ -253,27 +276,12 @@ def main() -> None:
     cells = {k: v for k, v in cells.items()
              if not (k.startswith("sched_") and not k.rsplit("_", 1)[-1].endswith("m"))}
 
-    replay_identical = {
-        str(pct): (
-            cells[f"crawl_pct{pct}_salt8"]["fetch_digest"]
-            == cells[f"crawl_pct{pct}_salt1"]["fetch_digest"]
-        )
-        for pct in (5, 50)
-    }
     out = {
         "metric": "skew resilience: crawl wall + schedule-stage wall, "
                   "mega-host 50% vs uniform, salt 8 vs 1",
         "pages": PAGES, "seeds": SEEDS, "rounds": ROUNDS, "cores": CORES,
         "reps_min": REPS, "sched_rows_levels": SCHED_ROWS_LEVELS,
         "cells": cells,
-        "skew_over_uniform_salted": round(
-            cells["crawl_pct50_salt8"]["wall_sec"]
-            / cells["crawl_pct5_salt8"]["wall_sec"], 3
-        ),
-        "salt1_over_salt8_on_skew": round(
-            cells["crawl_pct50_salt1"]["wall_sec"]
-            / cells["crawl_pct50_salt8"]["wall_sec"], 3
-        ),
         "sched_salt1_over_salt8_on_skew": {
             f"{rows // 1_000_000}m": round(
                 cells[f"sched_pct50_salt1_rows{rows // 1_000_000}m"]["wall_sec"]
@@ -282,8 +290,23 @@ def main() -> None:
             )
             for rows in SCHED_ROWS_LEVELS
         },
-        "replay_identical_across_salt": replay_identical,
     }
+    if not sched_only:
+        out["skew_over_uniform_salted"] = round(
+            cells["crawl_pct50_salt8"]["wall_sec"]
+            / cells["crawl_pct5_salt8"]["wall_sec"], 3
+        )
+        out["salt1_over_salt8_on_skew"] = round(
+            cells["crawl_pct50_salt1"]["wall_sec"]
+            / cells["crawl_pct50_salt8"]["wall_sec"], 3
+        )
+        out["replay_identical_across_salt"] = {
+            str(pct): (
+                cells[f"crawl_pct{pct}_salt8"]["fetch_digest"]
+                == cells[f"crawl_pct{pct}_salt1"]["fetch_digest"]
+            )
+            for pct in (5, 50)
+        }
     with open(OUT, "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out))
