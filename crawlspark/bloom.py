@@ -10,8 +10,9 @@ first-class engine operator:
   one bucket's hashes fit a Python worker (10^10 urls / 4096 buckets ≈ 2.4M
   int64 ≈ 20 MB); bit positions are computed with numpy (Arrow-vectorized,
   no per-row Python).
-* **probe**: frontier repartitioned by bucket → ``mapInArrow``; each task
-  lazily loads only the bucket bitsets it touches from the sidecar parquet
+* **probe**: frontier repartitioned by bucket into one wave of
+  ``mapInArrow`` tasks (``defaultParallelism``); each task lazily loads
+  only the bucket bitsets it touches from the sidecar parquet
   (partition-pruned read), so nothing is broadcast and nothing is joined —
   at 10^10 scale the ~12 GB sidecar never moves through a shuffle.
 
@@ -179,7 +180,9 @@ def _load_bucket_bitset(sidecar_path: str, bucket: int) -> bytes | None:
 def probe(frontier: DataFrame, sidecar_path: str, keep_maybe_seen: bool = False) -> DataFrame:
     """Filter frontier rows to those NOT (probably) in the seen set.
 
-    Repartitions by bucket so each mapInArrow task touches few buckets and
+    Repartitions by bucket into ``defaultParallelism`` partitions — one
+    wave of mapInArrow tasks, since each Python task pays a fixed start-up
+    cost before it reads a row — so each task touches few buckets and
     loads each bitset once (cached per task).  Rows whose bucket has no
     sidecar entry are trivially unseen.
     """
@@ -215,8 +218,5 @@ def probe(frontier: DataFrame, sidecar_path: str, keep_maybe_seen: bool = False)
 
         schema = StructType(list(schema.fields) + [StructField("maybe_seen", BooleanType(), False)])
 
-    n_parts = max(frontier.sparkSession.sparkContext.defaultParallelism, 8)
-    return (
-        frontier.repartition(n_parts, "bucket")
-        .mapInArrow(_probe_batches, schema)
-    )
+    n_parts = frontier.sparkSession.sparkContext.defaultParallelism
+    return frontier.repartition(n_parts, "bucket").mapInArrow(_probe_batches, schema)

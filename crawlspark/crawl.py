@@ -10,7 +10,7 @@ DataFrames, one durable snapshot per round:
             ─(salted two-phase window top-B; budget, sched_ts)→ scheduled
             ─(total-order sort → fetch_log)→ exact fetch order
             ─(as-of join pages; left-outer for misses)→ fetched
-            ─(pandas-UDF extract: text, links)→ parsed
+            ─(pandas-UDF extract: text, canonical links)→ parsed
     frontier' = dedup((frontier − tried) ∪ (links − tried − seen))
                  — the links-vs-seen anti-join is the round's ONLY
                  full-seen shuffle, bloom/cuckoo-probe-shrunk to the
@@ -103,19 +103,16 @@ def seeds_to_frontier(seeds: DataFrame, n_buckets: int) -> DataFrame:
 def links_to_frontier(
     parsed: DataFrame, next_round: int, n_buckets: int, max_depth: int
 ) -> DataFrame:
-    """Explode outlinks of fetched pages into frontier-shaped rows."""
+    """Explode outlinks of fetched pages into frontier-shaped rows.
+
+    ``links`` are already canonical (extract.text_links_udf), so this is
+    JVM-only: explode, group, hash."""
     return (
-        parsed.select(
-            F.col("depth").alias("parent_depth"),
-            F.explode_outer("links").alias("raw_url"),
-        )
-        .filter(F.col("raw_url").isNotNull())
-        .filter(F.col("parent_depth") < max_depth)
+        parsed.filter(F.col("depth") < max_depth)
         .select(
-            urlnorm.canonicalize(F.col("raw_url")).alias("url"),
-            (F.col("parent_depth") + 1).cast("int").alias("depth"),
+            F.explode("links").alias("url"),
+            (F.col("depth") + 1).cast("int").alias("depth"),
         )
-        .filter(F.col("url").isNotNull() & (F.col("url") != ""))
         .groupBy("url")
         .agg(F.min("depth").alias("depth"))
         .select(
@@ -182,10 +179,20 @@ def run_round(
         table.  A false positive is therefore re-checked, never dropped
         (no-false-negative invariant makes the fast path exact).  The ONE
         probe contract — round entry and the frontier_unseen fresh-link
-        path must never diverge."""
+        path must never diverge.
+
+        The check reads its input more than once (the sure/maybe split;
+        the small_probe key build and anti-join), and AQE does not reuse
+        an exchange whose reads prune different columns, so the one frame
+        read more than once is pinned: the probe's output when a sidecar
+        exists (else the mapInArrow probe and everything upstream of it
+        would run three times per round), the probe input otherwise."""
         if bloom_sidecar is not None and os.path.isdir(bloom_sidecar):
-            probed = _filter_mod(cfg.filter_kind).probe(
-                df, bloom_sidecar, keep_maybe_seen=True
+            probed = _materialize(
+                _filter_mod(cfg.filter_kind).probe(
+                    df, bloom_sidecar, keep_maybe_seen=True
+                ),
+                cfg.persist_mode,
             )
             sure_unseen = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
             to_check = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
@@ -199,7 +206,9 @@ def run_round(
         # loop path (fresh links), so the same flip applies — a standalone
         # run_round(frontier_unseen=False) caller with a beyond-broadcast
         # frontier should set sliver_broadcast=False instead
-        return dedup.unseen(df, seen, small_probe=cfg.sliver_broadcast)
+        return dedup.unseen(
+            _materialize(df, cfg.persist_mode), seen, small_probe=cfg.sliver_broadcast
+        )
 
     if frontier_unseen:
         if cfg.debug_invariants:
@@ -322,11 +331,8 @@ def run_round(
         # discovered ∖ new_seen = (discovered ∖ delta) ∖ seen — and the
         # stable within() sees the same candidate rows per surviving url,
         # so the kept representative (hence replay order) is identical.
-        # Pinned first: the seen check reads its probe more than once (the
-        # small_probe key build and anti-join, the bloom sure/maybe split)
-        # and AQE cannot reuse that exchange, so unpinned, links_to_frontier
-        # and its canonicalize UDF would run two or three times per round.
-        discovered = _materialize(discovered, cfg.persist_mode)
+        # _probe_unseen pins what its seen check re-reads, so
+        # links_to_frontier and the probe each run once per round.
         fresh = _probe_unseen(
             discovered.join(delta_keys, "url_hash", "left_anti")
         )

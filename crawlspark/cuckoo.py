@@ -332,8 +332,9 @@ def _load_bucket(sidecar_path: str, bucket: int) -> tuple[bytes, bytes] | None:
 
 
 def probe(frontier: DataFrame, sidecar_path: str, keep_maybe_seen: bool = False) -> DataFrame:
-    """Identical contract to bloom.probe — per-task bucket-pruned sidecar
-    reads, nothing broadcast, nothing shuffled beyond the bucket partition."""
+    """Identical contract to bloom.probe — one wave of ``defaultParallelism``
+    mapInArrow tasks, per-task bucket-pruned sidecar reads, nothing
+    broadcast, nothing shuffled beyond the bucket partition."""
 
     def _probe_batches(batches):
         cache: dict[int, tuple[bytes, bytes] | None] = {}
@@ -368,5 +369,5 @@ def probe(frontier: DataFrame, sidecar_path: str, keep_maybe_seen: bool = False)
             list(schema.fields) + [StructField("maybe_seen", BooleanType(), False)]
         )
 
-    n_parts = max(frontier.sparkSession.sparkContext.defaultParallelism, 8)
+    n_parts = frontier.sparkSession.sparkContext.defaultParallelism
     return frontier.repartition(n_parts, "bucket").mapInArrow(_probe_batches, schema)

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import re
 import xml.etree.ElementTree as ET
+from collections.abc import Iterable
 from html import unescape
 from html.parser import HTMLParser
 from urllib.parse import urljoin, urlsplit
@@ -33,6 +34,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .urlnorm import canonicalize_one
 
 _SKIP_TAGS = {"script", "style"}
 _XML_HINT = re.compile(rb"^\s*<\?xml|<PubmedArticle|<PubmedArticleSet", re.I)
@@ -571,17 +574,40 @@ _TEXT_LINKS_TYPE = StructType(
 )
 
 
+def text_canonical_links(
+    html: Iterable[bytes | None], urls: Iterable[str | None]
+) -> tuple[list[str | None], list[list[str]]]:
+    """(texts, links) for a batch of pages, each page's links canonical:
+    ``canonicalize_one`` of every resolved link, empty results dropped.
+    One dict memoizes the canonical forms across the batch — the same
+    link recurs on many pages of a host — so each distinct link is
+    canonicalized once per batch."""
+    canon: dict[str, str] = {}
+    texts: list[str | None] = []
+    links: list[list[str]] = []
+    for h, u in zip(html, urls):
+        text, raw = extract_both_one(h, u)
+        texts.append(text)
+        out = []
+        for link in raw:
+            c = canon.get(link)
+            if c is None:
+                c = canon[link] = canonicalize_one(link)
+            if c:
+                out.append(c)
+        links.append(out)
+    return texts, links
+
+
 @pandas_udf(_TEXT_LINKS_TYPE)
 def text_links_udf(html: pd.Series, url: pd.Series) -> pd.DataFrame:
     """J1+J2 fused: the fat ``html`` column crosses Arrow ONCE and is parsed
-    ONCE per page (text_udf + links_udf each re-decoded and re-parsed it).
-    Used by the crawl hot loop; the single-output UDFs remain the narrow
-    API."""
-    pairs = [extract_both_one(h, u) for h, u in zip(html, url)]
-    return pd.DataFrame(
-        {"text": [t for t, _ in pairs], "links": [ls for _, ls in pairs]},
-        index=html.index,
-    )
+    ONCE per page, and the links come out canonical
+    (:func:`text_canonical_links`), so the crawl loop turns them into
+    frontier rows without another Python stage.  Used by the crawl hot
+    loop; the single-output UDFs remain the narrow (raw-link) API."""
+    texts, links = text_canonical_links(html, url)
+    return pd.DataFrame({"text": texts, "links": links}, index=html.index)
 
 
 # stop Catalyst from duplicating the expensive UDF into collapsed
@@ -897,6 +923,7 @@ __all__ = [
     "extract_text_one",
     "extract_links_one",
     "extract_both_one",
+    "text_canonical_links",
     "extract_links_polite_one",
     "decode_bytes",
 ]

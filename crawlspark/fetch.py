@@ -98,6 +98,15 @@ def lookup_latest(
         hits = pages.select("url", "warc_ts", "html").join(
             F.broadcast(wanted), ["url", "warc_ts"], "inner"
         )
+        # Fixed-width url exchanges for the window and the join: AQE
+        # coalesces planner-inserted shuffles toward 1 MB partitions, which
+        # packs a round's html into ONE partition, so the extraction UDF
+        # above this join ran as one task.  A repartition-by-number
+        # exchange is never coalesced and satisfies both operators, so no
+        # exchange is added and extraction runs one full wave.
+        n = scheduled.sparkSession.sparkContext.defaultParallelism
+        scheduled = scheduled.repartition(n, "url")
+        hits = hits.repartition(n, "url")
     else:
         wanted = scheduled.select("url").join(keys, "url", "inner")
         # bucketed-corpus path: join on url ALONE so the pages side's

@@ -44,9 +44,12 @@ def ensure_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
     # plan-construction time (ADVICE r3).  The width-setting operator is a
     # SHUFFLE exchange, so consult the PHYSICAL pre-AQE plan (sparkPlan —
     # planning only, runs no jobs): if it contains a non-broadcast Exchange,
-    # the output width is spark.sql.shuffle.partitions (>= cores in this
-    # engine's session config, and AQE's parallelismFirst coalescing floors
-    # at defaultParallelism) and we leave the plan alone.  Plans with no
+    # the planned width is spark.sql.shuffle.partitions (>= cores in this
+    # engine's session config) and we leave the plan alone.  That width is
+    # not a floor: AQE coalesces such an exchange toward its minimum
+    # partition size, and a small input can come out narrower than
+    # defaultParallelism (measured on local[4]: the crawl's extraction
+    # input came out of 8 shuffle partitions as ONE).  Plans with no
     # shuffle — scans, local relations, unions, and BROADCAST-join-only
     # plans whose stream side keeps the scan's 1-2 partitions (r4 review:
     # the logical-plan 'Join' check wrongly skipped those) — consult

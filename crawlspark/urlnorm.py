@@ -15,7 +15,10 @@ RFC-3986 canonicalization for web URLs:
 Implemented once in pure Python (``canonicalize_one`` — used by the oracle
 crawler and unit tests) and vectorized as an Arrow-batched pandas UDF
 (``canonicalize_udf``) for the engine — no per-row Python at plan level
-(BASELINE.json input_hint).
+(BASELINE.json input_hint).  In the crawl loop the UDF runs only on seeds:
+discovered links come out of the extraction UDF already canonical
+(``extract.text_links_udf`` calls ``canonicalize_one``), so a round has no
+separate canonicalization stage.
 """
 
 from __future__ import annotations

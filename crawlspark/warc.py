@@ -34,9 +34,9 @@ import os
 import zlib
 from datetime import datetime, timezone
 
-_log = logging.getLogger(__name__)
-
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 _CRLF = b"\r\n"
 

@@ -10,6 +10,7 @@ same goldens — "a killed run resumes exactly".
 from __future__ import annotations
 
 import hashlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -420,14 +421,11 @@ def test_invalidate_recrawl_cuckoo_deletes_in_place(spark, fixtures, tmp_path):
     assert dedup.unseen(other_frontier, seen2).count() == 0
 
 
-def test_frontier_unseen_flag_equivalence(spark, fixtures, tmp_path):
-    """run_round(frontier_unseen=True) — the loop's invariant-backed fast
-    path (no entry anti-join; seen check moved to discovered links, probe-
-    shrunk when a sidecar exists) — must produce exactly the same round as
-    the default full-check path, given a frontier that IS disjoint from
-    seen.  Checked on a mid-crawl state (round-1 inputs built by a default
-    round 0), with and without a bloom sidecar."""
-    from crawlspark import bloom, state
+def _round1_inputs(spark, fixtures, sidecar: str):
+    """(frontier, seen) entering round 1, built by a default round 0, and
+    a real bloom sidecar at ``sidecar`` encoding that seen — exactly what
+    the loop would have committed after round 0."""
+    from crawlspark import bloom
 
     pages_df, seeds_df, robots_df = fixtures[:3]
     fr0 = crawl._materialize(
@@ -435,16 +433,25 @@ def test_frontier_unseen_flag_equivalence(spark, fixtures, tmp_path):
     )
     seen0 = spark.createDataFrame([], "url_hash long, bucket int")
     r0 = crawl.run_round(
-        spark, fr0, seen0, pages_df, robots_df, 0, CFG, None, "eqv",
+        spark, fr0, seen0, pages_df, robots_df, 0, CFG, None, "r0",
         collect_metrics=False,
     )
     fr1 = crawl._materialize(r0["frontier"], CFG.persist_mode)
     seen1 = crawl._materialize(r0["seen"], CFG.persist_mode)
-
-    # a real sidecar for the fast path's probe branch (encodes seen1,
-    # exactly what the loop would have committed after round 0)
-    sidecar = str(tmp_path / "bloom_eqv")
     bloom.write_sidecar(bloom.build(seen1), sidecar)
+    return fr1, seen1
+
+
+def test_frontier_unseen_flag_equivalence(spark, fixtures, tmp_path):
+    """run_round(frontier_unseen=True) — the loop's invariant-backed fast
+    path (no entry anti-join; seen check moved to discovered links, probe-
+    shrunk when a sidecar exists) — must produce exactly the same round as
+    the default full-check path, given a frontier that IS disjoint from
+    seen.  Checked on a mid-crawl state (round-1 inputs built by a default
+    round 0), with and without a bloom sidecar."""
+    pages_df, robots_df = fixtures[0], fixtures[2]
+    sidecar = str(tmp_path / "bloom_eqv")
+    fr1, seen1 = _round1_inputs(spark, fixtures, sidecar)
 
     def round1(flag: bool, sc: str | None):
         out = crawl.run_round(
@@ -590,3 +597,54 @@ def test_seen_checkpoint_cadence_and_gc(spark, fixtures, tmp_path):
         ).select(F.xxhash64("url").alias("h")).collect()
     }
     assert {r["url_hash"] for r in s2.collect()} == want_seen
+
+
+def _plan(df) -> str:
+    import contextlib
+    import io as _io
+
+    buf = _io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def test_links_to_frontier_plan_has_no_python(spark):
+    """Extraction emits canonical links, so turning them into frontier
+    rows is JVM-only: no Arrow or row-at-a-time Python UDF in the plan."""
+    parsed = spark.createDataFrame(
+        [(0, ["https://a.example/x", "https://b.example/"]), (1, None)],
+        "depth int, links array<string>",
+    )
+    plan = _plan(crawl.links_to_frontier(parsed, 1, CFG.n_buckets, CFG.max_depth))
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
+def test_loop_round_probes_once(spark, fixtures, tmp_path, monkeypatch):
+    """A loop round with a bloom sidecar evaluates the mapInArrow probe
+    once: its output is pinned, and the plans downstream of the pin
+    (the sure/maybe split and both reads of the exact re-check) carry no
+    probe of their own."""
+    pages_df, robots_df = fixtures[0], fixtures[2]
+    sidecar = str(tmp_path / "bloom_once")
+    fr1, seen1 = _round1_inputs(spark, fixtures, sidecar)
+
+    pinned: list[str] = []
+    real = crawl._materialize
+
+    def recording(df, persist_mode):
+        pinned.append(_plan(df))
+        return real(df, persist_mode)
+
+    monkeypatch.setattr(crawl, "_materialize", recording)
+    out = crawl.run_round(
+        spark, fr1, seen1, pages_df, robots_df, 1, CFG, sidecar, "once",
+        collect_metrics=False, frontier_unseen=True,
+    )
+    def n_probes(plan: str) -> int:
+        # formatted explain details each operator once, as "(id) Name"
+        return len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M))
+
+    assert sum(map(n_probes, pinned)) == 1, pinned
+    assert n_probes(_plan(out["frontier"])) == 0
+    assert out["frontier"].count() > 0

@@ -102,8 +102,9 @@ def test_udfs_match_python(spark):
 
 def test_fused_udf_identical_to_separate(spark):
     """text_links_udf (one decode+parse) must be field-identical to the
-    separate text_udf/links_udf on every golden fixture and generated page,
-    including XML, malformed, and null html."""
+    separate text_udf and the CANONICALIZED links_udf (canonicalize_one of
+    each link, empty results dropped) on every golden fixture and
+    generated page, including XML, malformed, and null html."""
     import gen_pages as gp
     from pyspark.sql import functions as F
 
@@ -130,10 +131,58 @@ def test_fused_udf_identical_to_separate(spark):
         )
         .collect()
     )
+    from crawlspark.urlnorm import canonicalize_one
+
     assert len(got) == len(rows)
     for r in got:
         assert r["t_fused"] == r["t_sep"], r["url"]
-        assert list(r["l_fused"] or []) == list(r["l_sep"] or []), r["url"]
+        want = [c for c in map(canonicalize_one, r["l_sep"] or []) if c]
+        assert list(r["l_fused"] or []) == want, r["url"]
+
+
+def test_fused_links_are_canonical_extract_links():
+    """The fused extraction's links are canonicalize_one of each
+    extract_links_one link, empty results dropped — over generated bases
+    and hrefs that include the hostile shapes the joiner fuzz uses, with
+    one memo shared across the batch's pages as in the UDF."""
+    from html import escape
+
+    from hypothesis import given, settings, strategies as st
+
+    from crawlspark.urlnorm import canonicalize_one
+
+    piece = st.sampled_from(
+        ["a", "b2", "/", "//", ".", "..", "?", "#", ";", ":", "&", "=",
+         "%41", "%7e", "~", "-", "_", " ", "\t", "é", "@", "https://",
+         "http://", "HTTP://", "X.Y", ":443", ":80", "+", "\\", "[", "]",
+         "[::1]"]
+    )
+    href = st.lists(piece, min_size=0, max_size=8).map("".join)
+    page = st.tuples(
+        st.sampled_from(JOIN_BASES + [None]),
+        st.lists(st.sampled_from(JOIN_HREFS) | href, min_size=0, max_size=6),
+    )
+
+    @settings(max_examples=300, deadline=None)
+    @given(st.lists(page, min_size=1, max_size=4))
+    def run(pages):
+        html = [
+            (
+                "<html><body>"
+                + "".join(f'<a href="{escape(h)}">x</a>' for h in hrefs)
+                + "</body></html>"
+            ).encode()
+            for _, hrefs in pages
+        ]
+        bases = [b for b, _ in pages]
+        _, got = extract.text_canonical_links(html, bases)
+        for h, b, links in zip(html, bases, got):
+            want = [
+                c for c in map(canonicalize_one, extract_links_one(h, b)) if c
+            ]
+            assert links == want, (b, h)
+
+    run()
 
 
 def test_nofollow_and_meta_robots_directives():

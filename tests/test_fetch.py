@@ -161,3 +161,16 @@ def test_lookup_latest_broadcast_subquery_has_no_smj(spark, pages):
     for seg in plan.split("SortMergeJoin")[1:]:
         head = seg.splitlines()[0]
         assert "Inner" not in head, plan
+
+
+def test_lookup_latest_runs_one_full_wave(spark, pages):
+    """A round's batch is small next to AQE's 1 MB minimum partition size,
+    so a coalescible url exchange would hand the extraction UDF above the
+    fetch join ONE partition — one task on one core.  The join's url
+    exchanges repartition by number, which AQE never coalesces, so even a
+    50-row batch comes out in defaultParallelism partitions."""
+    urls = [r["url"] for r in pages.select("url").distinct().limit(50).collect()]
+    scheduled = spark.createDataFrame([(u,) for u in urls], "url string")
+    got = fetch.lookup_latest(scheduled, pages, fetch.latest_keys(pages))
+    assert got.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert got.count() == 50

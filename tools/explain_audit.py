@@ -3,11 +3,14 @@ operators into BENCH/EXPLAIN.md and asserts the plan properties that matter
 at 100 TB scale:
 
 * fetch join: pages side has NO Exchange (html never shuffles); the wanted
-  side is a BroadcastExchange
+  side is a BroadcastExchange; the two url exchanges (as-of window, final
+  join) repartition by number, so AQE cannot coalesce extraction's input
+  below one wave of tasks
 * parquet scans: filters pushed (PushedFilters) and columns pruned (ReadSchema)
 * agg_basic: partial HashAggregate before the shuffle (map-side combine)
 * scheduler: no Python operator, at most two hash shuffles (the salted
   ``(host, salt)`` phase-1 window and the per-host re-rank)
+* links_to_frontier: no Python operator (extraction emits canonical links)
 
 Usage: python tools/explain_audit.py
 """
@@ -86,6 +89,18 @@ def main() -> int:
         checks.append("FAIL inner SMJ present (broadcast-subquery regression)")
     else:
         checks.append("OK no inner SortMergeJoin anywhere in the broadcast path")
+    # AQE coalesces ENSURE_REQUIREMENTS exchanges toward 1 MB partitions,
+    # which packs a round's html into one extraction task; a
+    # repartition-by-number exchange keeps defaultParallelism partitions
+    url_ex = [
+        ln for ln in p.splitlines() if ln.startswith("Arguments: hashpartitioning(url")
+    ]
+    fixed = [ln for ln in url_ex if "REPARTITION_BY_NUM" in ln]
+    if len(url_ex) == 2 and fixed == url_ex:
+        checks.append("OK both url exchanges are REPARTITION_BY_NUM (AQE cannot coalesce)")
+    else:
+        failures.append(f"fetch join: url exchanges {url_ex} (expected 2 REPARTITION_BY_NUM)")
+        checks.append(f"FAIL url exchanges not all REPARTITION_BY_NUM: {url_ex}")
     sections.append(("fetch.lookup_latest (as-of fetch join)", p, checks))
 
     # 2. scan pushdown/pruning
@@ -165,6 +180,23 @@ def main() -> int:
         failures.append(f"sliver recheck: {n_bex} BroadcastExchange (expected 2)")
         checks4b.append(f"FAIL expected 2 BroadcastExchange, saw {n_bex}")
     sections.append(("dedup.unseen(small_probe=True) (sliver broadcast-flip)", p4b, checks4b))
+
+    # 4c. frontier': extraction emits canonical links, so exploding them
+    # into frontier rows (over the pinned parsed batch, as in the loop)
+    # runs no Python
+    from crawlspark import extract
+
+    parsed = (
+        fetched.withColumn("__tl", extract.text_links_udf(F.col("html"), F.col("url")))
+        .select("url", "depth", F.col("__tl.links").alias("links"))
+        .localCheckpoint(eager=True)
+    )
+    p4c = plan_of(crawl.links_to_frontier(parsed, 1, 16, 6))
+    py4c = [op for op in ("ArrowEvalPython", "BatchEvalPython") if op in p4c]
+    checks4c = [f"{'FAIL' if py4c else 'OK'} Python operators in links_to_frontier plan: {py4c or 'none'}"]
+    if py4c:
+        failures.append(f"links_to_frontier: Python operators {py4c}")
+    sections.append(("crawl.links_to_frontier (canonical links -> frontier rows)", p4c, checks4c))
 
     # 5. registry-query plan spot-checks (round 2): the judge-visible
     # queries must keep their scale-critical shapes
