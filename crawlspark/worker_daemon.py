@@ -27,7 +27,14 @@ try:  # pragma: no cover - defensive: daemon must never fail to start
 except Exception:
     pass
 
+import gc
+
 from pyspark.daemon import manager
 
 if __name__ == "__main__":
+    # Freeze the preloaded heap before the first fork: a worker's full
+    # collections then skip it instead of walking (and un-sharing) it, so a
+    # Python stage costs the same whichever worker runs it — an extraction
+    # wave fills every core, and its slowest worker sets the stage's wall.
+    gc.freeze()
     manager()
