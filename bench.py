@@ -41,9 +41,11 @@ BENCH_ROUNDS = int(os.environ.get("CRAWLSPARK_BENCH_ROUNDS", "2"))
 # this host carries bursty co-tenant load (identical runs measured 2.5-3x
 # apart); min-of-REPS is the standard contended-machine practice.  3 reps
 # (late r4, was 2): an interleaved A/B showed the first full-scale crawl
-# after the light warmup still pays JIT/compilation tails (~2x the steady
-# state); rep2 is the first fully-warm measurement — exactly the state a
-# long-lived cluster is always in
+# after the light warmup running ~2x the steady state.  That was blamed on
+# JIT/compilation tails, but Spark's codegen cache then held 100 entries,
+# less than one crawl's classes, so EVERY rep recompiled its generated code;
+# session.py now sizes the cache to hold them, and each rep prints how many
+# classes it compiled
 BENCH_REPS = int(os.environ.get("CRAWLSPARK_BENCH_REPS", "3"))
 PAGES_CACHE = os.environ.get("CRAWLSPARK_PAGES_PATH") or os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "BENCH", "data", f"pages_{BENCH_PAGES}"
@@ -104,13 +106,16 @@ def bench_crawl(spark, pages_path: str, rounds: int = BENCH_ROUNDS, warmup: bool
     """The headline: full crawl pipeline, urls scheduled+extracted/sec.
 
     ``warmup`` first runs a 200-seed single-round crawl over the same corpus
-    so whole-stage codegen / JIT compilation of every stage shape happens
+    so whole-stage codegen / JIT compilation of most stage shapes happens
     outside the timed window — the steady state a long-lived cluster is in.
+    Plans whose shape depends on the seed count or the round still compile
+    in rep0; each rep prints its count.
     """
     import gen_pages as gp
 
     from crawlspark import config, crawl
     from crawlspark.schemas import PAGES_SCHEMA
+    from crawlspark.session import codegen_compiles
 
     pages = spark.read.schema(PAGES_SCHEMA).parquet(pages_path)
     robots = gp.robots_df(spark)
@@ -136,18 +141,20 @@ def bench_crawl(spark, pages_path: str, rounds: int = BENCH_ROUNDS, warmup: bool
     )
     best = None
     for _rep in range(max(reps, 1)):
+        compiled0 = codegen_compiles(spark)
         t0 = time.monotonic()
         result = crawl.crawl(spark, seeds, pages, robots, cfg=_cfg(rounds))
         n_fetched = result["fetch_log"].count()
         n_extracted = result["extracted"].filter("text IS NOT NULL").count()
         wall = time.monotonic() - t0
-        # per-rep diagnostics to stderr: makes the JIT warm-up trajectory
-        # visible (measured: rep0 after the light warmup can run ~2x the
-        # steady state; by rep2 the JVM is fully compiled) and load bursts
-        # attributable, without touching the one-JSON-line stdout contract
+        # per-rep diagnostics to stderr: makes the warm-up trajectory
+        # visible (classes compiled: 0 once the warm-up compiled the same
+        # plans) and load bursts attributable, without touching the
+        # one-JSON-line stdout contract
         print(
             f"crawl rep{_rep}: wall={wall:.2f}s "
-            f"urls/s={n_fetched / wall:,.0f}",
+            f"urls/s={n_fetched / wall:,.0f} "
+            f"compiled={codegen_compiles(spark) - compiled0}",
             file=sys.stderr,
         )
         if best is None or wall < best["wall_sec"]:
@@ -262,6 +269,7 @@ def run_floor(reps: int = 3) -> None:
 
     from crawlspark import config, crawl
     from crawlspark.schemas import PAGES_SCHEMA
+    from crawlspark.session import codegen_compiles
 
     rounds = 3
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
@@ -282,14 +290,16 @@ def run_floor(reps: int = 3) -> None:
         )
         warm_workers(spark)
         crawl.crawl(spark, seeds, pages, robots, cfg=cfg)["fetch_log"].count()  # warm
+        compiled0 = codegen_compiles(spark)
         t0 = time.monotonic()
         result = crawl.crawl(spark, seeds, pages, robots, cfg=cfg)
         result["fetch_log"].count()
         wall = time.monotonic() - t0
+        compiled = codegen_compiles(spark) - compiled0
         spark.stop()
         per_round = wall / max(result["rounds_run"], 1)
         print(f"floor rep: wall={wall:.2f}s rounds={result['rounds_run']} "
-              f"per_round={per_round:.2f}s", file=sys.stderr)
+              f"per_round={per_round:.2f}s compiled={compiled}", file=sys.stderr)
         if best is None or per_round < best["sec_per_round"]:
             best = {"wall": round(wall, 2), "rounds": result["rounds_run"],
                     "sec_per_round": round(per_round, 2)}

@@ -6,8 +6,6 @@ lineage and fetch/parse metrics" attached to every snapshot.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,16 +33,6 @@ def stage_metrics(
             F.lit(wall_ms).cast("long").alias("wall_ms"),
         )
     )
-
-
-class StageTimer:
-    """Driver-side wall clock for a stage; pairs with stage_metrics."""
-
-    def __init__(self) -> None:
-        self.t0 = time.monotonic()
-
-    def ms(self) -> int:
-        return int((time.monotonic() - self.t0) * 1000)
 
 
 def per_host(df: DataFrame) -> DataFrame:

@@ -8,6 +8,17 @@ from pyspark.sql import SparkSession
 
 from . import config
 
+# generated classes kept compiled per JVM: ~7x a whole snapshot-resume
+# crawl's working set (see get_spark)
+CODEGEN_CACHE_ENTRIES = 2000
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes compiled with Janino so far by the driver JVM (in local mode,
+    its executors' too).  A counter read: runs no Spark job."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
 
 def _importable_in_subprocess(module: str) -> bool:
     """Can a fresh worker python import ``module`` under the CURRENT env?"""
@@ -81,6 +92,13 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Spark's codegen cache, default 100 entries: less than one
+        # crawl's working set, so every crawl recompiled ~150 classes.  The
+        # key is (context classloader, source), so each class is cached once
+        # for the driver thread and once for a task thread: a warm-up plus a
+        # `bfs` crawl needs ~175 entries, a whole snapshot-resume run ~275.
+        # Static: the cache is sized once, when CodeGenerator first loads.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
